@@ -86,11 +86,10 @@ HEADLINE = [
     # round-6: the last TPC-H shape (Q10) — scan-heavy, broadcast dims,
     # TakeOrderedAndProject top-20
     "returned_item_losses_q10",
-    # round-7: the faiss-shaped Arrow GEMM re-rank (same job + oracle as
-    # ann_ivf_topk_large_queryset — the pair quantifies the strategy gap)
+    # second registry names of ann_ivf_topk_large_queryset and
+    # ann_bruteforce_topk (same function, same oracle); kept so the
+    # headline set stays comparable across runs
     "ann_ivf_topk_arrow",
-    # round-7: the Arrow serving-shape brute force (same job + oracle as
-    # ann_bruteforce_topk)
     "ann_bruteforce_topk_arrow",
     # round-8: the band-bucket-capped MinHash path (planted viral cluster,
     # next-band refinement live) and the contamination-rate report

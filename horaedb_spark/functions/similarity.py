@@ -1,24 +1,28 @@
 """Similarity search over embedding columns (LLM-pipeline surface).
 
-Two paths, mirroring what a 100 TB deployment needs:
+One kernel per search operator, each in the shape a 100 TB deployment needs:
 
-- ``brute_force_topk`` — the exactness baseline: broadcast the (small) query
-  set against the full corpus; one pass, no shuffle of the corpus, window
-  top-k per query.
+- ``brute_force_topk`` — the exactness baseline: the (small) query batch is
+  collected on the driver and rides into a ``mapInPandas`` over the corpus;
+  each corpus batch scores one int64 ``C @ Q.T`` and emits its per-query
+  partial top-k. No join, and no corpus shuffle before the final top-k.
 - ``lsh_ann_topk`` — the scale path: random-hyperplane LSH bucketing. Both
   sides hash into a B-bit bucket; candidates = same-bucket rows; top-k within
   bucket. The hyperplanes are md5-derived ±1 weights over *quantized integer*
   components, so bucket assignment is exact integer arithmetic — engine
   portable (verifiable against a SQL oracle) AND immune to float-association
   nondeterminism across partitions/engines.
-
 - ``ivf_ann_topk`` — the second scale path: IVF-Flat with a *deterministic
   seeded* coarse quantizer (centroids = an md5-ordered sample of the corpus,
   so no k-means training state; assignment is exact integer L2 in quantized
   space). Corpus rows land in one cell each; a query probes its ``nprobe``
-  nearest cells; exact cosine re-ranks the candidates. At 100 TB the cell
-  column is a partitioning key — candidate generation becomes partition
-  pruning instead of a corpus-wide scan.
+  nearest cells; the two sides cogroup on the cell id and each cell
+  re-ranks as one int64 ``Q @ C.T``. At 100 TB the cell column is a
+  partitioning key — candidate generation becomes partition pruning
+  instead of a corpus-wide scan.
+
+The brute-force and IVF kernels compute in int64, so they take QUANTIZED
+vectors (``quantize``) and integral ids, and reject anything else.
 """
 
 from __future__ import annotations
@@ -58,13 +62,12 @@ def with_checked_norm(
     quantized: bool = False,
 ) -> DataFrame:
     """Adds column ``out`` = ``vector_norm(vec)`` with the zero-norm
-    precondition ENFORCED: cosine is undefined at norm 0, and the two ANN
-    execution strategies would otherwise silently DISAGREE on such rows
-    (Spark's window sort ranks NaN greatest; the Arrow kernels' numpy
-    lexsort ranks it last). The Arrow kernels already raise ValueError on
-    zero-norm inputs; this makes the expression twins reject the SAME
-    inputs — ``raise_error`` fires per offending row inside codegen and
-    names the id. Filter zero-norm rows upstream if they are expected.
+    precondition ENFORCED: cosine is undefined at norm 0, and the LSH
+    expression path would otherwise silently rank the NaN cosines (Spark's
+    window sort ranks NaN greatest) where the brute-force and IVF Arrow
+    kernels raise ValueError on the same rows. This makes LSH reject the
+    SAME inputs — ``raise_error`` fires per offending row inside codegen
+    and names the id. Filter zero-norm rows upstream if they are expected.
 
     Deliberately TWO projections (norm first, check second) so the fold
     runs ONCE per row: spelling ``when(norm == 0, raise).otherwise(norm)``
@@ -144,6 +147,86 @@ def lsh_bucket(qvec: Column, num_planes: int, dim: int, plane_offset: int = 0) -
     return F.concat(*bits)
 
 
+_INTEGRAL = ("bigint", "int", "smallint", "tinyint")
+
+
+def _require_integral(
+    df: DataFrame, vec_col: str, id_col: str | None, op: str
+) -> None:
+    """The brute-force and IVF kernels compute in int64: a float vector
+    would be silently TRUNCATED by their ``astype(np.int64)`` (embedding
+    components in (-1, 1) all become 0). Reject such inputs from the
+    schema, before any plan is built."""
+    types = dict(df.dtypes)
+    bad = []
+    if types[vec_col] not in {f"array<{t}>" for t in _INTEGRAL}:
+        bad.append(f"{vec_col!r} is {types[vec_col]}")
+    if id_col is not None and types[id_col] not in _INTEGRAL:
+        bad.append(f"{id_col!r} is {types[id_col]}")
+    if bad:
+        needs = "integer vectors" + (" and integral ids" if id_col else "")
+        raise ValueError(
+            f"{op} computes in int64 and needs {needs}, but "
+            f"{' and '.join(bad)}; quantize float embeddings first "
+            "(quantize(col))"
+        )
+
+
+def _norms(X: np.ndarray, ids: np.ndarray) -> np.ndarray:
+    """Per-row L2 norms of an int64 block (exact integer sum, one sqrt),
+    with the zero-norm precondition ENFORCED: cosine is undefined there,
+    so the kernels raise instead of ranking NaNs."""
+    n = np.sqrt((X * X).sum(axis=1).astype(np.float64))
+    if not n.all():
+        bad = ids[n == 0]
+        raise ValueError(
+            f"cosine undefined for zero-norm vectors (ids {bad[:5].tolist()}"
+            f"{'...' if len(bad) > 5 else ''}); filter them upstream"
+        )
+    return n
+
+
+_NO_ROWS = pd.DataFrame(
+    {"query_id": np.empty(0, np.int64), "corpus_id": np.empty(0, np.int64),
+     "cos_sim": np.empty(0, np.float64)}
+)
+_TOPK_SCHEMA = "query_id long, corpus_id long, cos_sim double"
+
+
+def _cosine_topk(
+    qid: np.ndarray, Q: np.ndarray, qn: np.ndarray,
+    cid: np.ndarray, C: np.ndarray, k: int,
+) -> pd.DataFrame:
+    """Per-query partial top-k of one (queries x corpus) block under
+    (cos DESC, corpus_id ASC), self-pairs excluded. The dot and squared
+    norms are exact int64 sums; the float steps (sqrt of the exact sums,
+    norm product, division) are ``dedup.cosine``'s IEEE doubles in the
+    same order, so the rows hash-match the SQL oracles."""
+    cos = (Q @ C.T).astype(np.float64) / (qn[:, None] * _norms(C, cid)[None, :])
+    cos[qid[:, None] == cid[None, :]] = -np.inf  # mask self-pairs
+    kk = min(k, cos.shape[1])
+    # lexsort's last key is primary; -cos negation is exact for doubles
+    take = np.lexsort((np.broadcast_to(cid, cos.shape), -cos), axis=1)[:, :kk]
+    out_s = np.take_along_axis(cos, take, axis=1).ravel()
+    keep = out_s > -np.inf
+    return pd.DataFrame(
+        {"query_id": np.repeat(qid, kk)[keep],
+         "corpus_id": cid[take.ravel()][keep],
+         "cos_sim": out_s[keep]}
+    )
+
+
+def _final_topk(cand: DataFrame, k: int) -> DataFrame:
+    """Global per-query top-k of (query_id, corpus_id, cos_sim) rows under
+    (cos_sim DESC, corpus_id ASC), ranked 1..k."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
+    return (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "corpus_id", "rank", "cos_sim")
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -151,35 +234,35 @@ def brute_force_topk(
     id_col: str,
     k: int,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors per query (excluding self). The query set
-    broadcasts; the corpus never shuffles until the final per-query top-k."""
-    c = with_checked_norm(
-        corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        ),
-        F.col("cv"), F.col("corpus_id"), "cn",
-    )
-    q = with_checked_norm(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        ),
-        F.col("qv"), F.col("query_id"), "qn",
-    )
-    scored = c.join(F.broadcast(q), F.col("corpus_id") != F.col("query_id")).select(
-        "query_id",
-        "corpus_id",
-        (dot_product(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-            "cos_sim"
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "cos_sim")
-    )
+    """Exact top-k cosine neighbors per query (excluding self), in the
+    SERVING shape: the query batch is collected on the driver (it must be
+    small — the callers pass at most 100 queries) and rides into a
+    ``mapInPandas`` over the corpus as numpy literals. Each corpus batch
+    computes one int64 ``C @ Q.T`` and emits only its per-query partial
+    top-k, so the final window sees ≤ k rows per (query, corpus batch); the
+    corpus never joins or shuffles. An empty query batch returns no rows.
+
+    Both sides must be quantized integer vectors with integral ids; ids come
+    back as bigint."""
+    _require_integral(corpus, vec_col, id_col, "brute_force_topk")
+    _require_integral(queries, vec_col, id_col, "brute_force_topk")
+    qrows = queries.select(id_col, vec_col).collect()
+    qid = np.array([r[0] for r in qrows], dtype=np.int64)
+    dim = len(qrows[0][1]) if qrows else 0
+    Q = np.array([r[1] for r in qrows], dtype=np.int64).reshape(len(qrows), dim)
+    qn = _norms(Q, qid)
+
+    def score(batches):
+        for pdf in batches:
+            if len(pdf) == 0 or len(qid) == 0:
+                continue
+            C = np.stack(pdf["__v__"].to_numpy()).astype(np.int64, copy=False)
+            yield _cosine_topk(qid, Q, qn, pdf["__id__"].to_numpy(), C, k)
+
+    cand = corpus.select(
+        F.col(id_col).alias("__id__"), F.col(vec_col).alias("__v__")
+    ).mapInPandas(score, _TOPK_SCHEMA)
+    return _final_topk(cand, k)
 
 
 def lsh_ann_topk(
@@ -223,12 +306,7 @@ def lsh_ann_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "cos_sim")
-    )
+    return _final_topk(scored, k)
 
 
 def embedding_lsh_near_dup_pairs(
@@ -315,38 +393,13 @@ def ivf_centroids(corpus: DataFrame, id_col: str, vec_col: str, num_cells: int) 
     return sample.withColumn("cid", F.row_number().over(w)).select("cid", "centv")
 
 
-def ivf_probe_expr(cent_rows: list[tuple[int, list[int]]], vec_col: Column, nprobe: int) -> Column:
-    """``nprobe`` nearest cell ids for a quantized vector, as a PURE column
-    expression over a literal centroid table (ties broken by smaller cid).
-
-    The coarse quantizer is metadata-sized (16..65536 cells — the faiss IVF
-    regime), so it rides into every task as expression literals instead of a
-    join side: cell assignment is a narrow map — no explode to C rows per
-    input, no row_number shuffle carrying vectors. At 100 TB this is the
-    difference between a free projection and shuffling C× the corpus.
-    Distances stay exact integer L2, so any engine reproduces the argmin."""
-    # two parallel TRUE Literal nodes (not per-element expression trees):
-    # the whole C×dim matrix is 2 nodes in the plan, so optimizer passes and
-    # codegen stay O(1) in quantizer size
-    cvs = F.lit([[int(x) for x in cv] for _, cv in cent_rows])
-    cids = F.lit([int(cid) for cid, _ in cent_rows])
-    cells = F.zip_with(
-        cvs,
-        cids,
-        lambda cv, cid: F.struct(_sq_l2(vec_col, cv).alias("d"), cid.alias("cid")),
-    )
-    # struct ordering is lexicographic on (d, cid) — array_sort gives the
-    # probe list directly
-    return F.transform(F.slice(F.array_sort(cells), 1, nprobe), lambda s: s["cid"])
-
-
 def ivf_probe_udf(cent_rows: list[tuple[int, list[int]]], nprobe: int):
     """Arrow-vectorized probe kernel: per batch, one int64 matmul
     ``X @ C.T`` + argsort — ~1000× the throughput of interpreted per-element
     expression eval, and still EXACT integer arithmetic (identical argmin to
-    ``ivf_probe_expr`` / the SQL oracle, ties to the smaller cid via stable
-    sort over cid-ordered centroids). This is the hot-path kernel; the
-    expression form stays as the engine-portable reference semantics."""
+    the SQL oracles, ties to the smaller cid via stable sort over
+    cid-ordered centroids). Takes quantized integer vectors: callers check
+    the column type with ``_require_integral`` first."""
     rows = sorted(cent_rows)  # cid order — makes stable-sort ties pick smaller cid
     C = np.array([cv for _, cv in rows], dtype=np.int64)
     cids = np.array([cid for cid, _ in rows], dtype=np.int64)
@@ -375,6 +428,7 @@ def ivf_assign(
     driver-side (metadata-sized, like any coarse quantizer — the faiss IVF
     regime) and shipped into an Arrow-batched argmin kernel — assignment adds
     ZERO shuffles and ZERO joins to the plan: a narrow map stage."""
+    _require_integral(df, vec_col, None, "ivf_assign")
     cent_rows = [(r["cid"], r["centv"]) for r in centroids.collect()]
     probes = ivf_probe_udf(cent_rows, nprobe)(F.col(vec_col))
     if nprobe == 1:
@@ -391,65 +445,34 @@ def ivf_ann_topk(
     num_cells: int,
     nprobe: int,
     centroids: list[tuple[int, list[int]]] | None = None,
-    broadcast_queries: bool = True,
-    rerank: str = "auto",
 ) -> DataFrame:
     """IVF-Flat approximate top-k: corpus rows live in their single nearest
     cell; each query probes its ``nprobe`` nearest cells; exact (quantized-
     integer) cosine re-ranks candidates within the probed cells.
+
+    Execution is the faiss shape: the two sides COGROUP on the cell id and
+    each cell re-ranks as ONE int64 matrix multiply ``Q @ C.T`` + per-query
+    partial top-k inside an ``applyInPandas`` kernel; only ≤ k rows per
+    (query, probed cell) leave the kernel, so the final global top-k window
+    sees k*nprobe rows per query instead of the whole candidate set. Vectors
+    ship once per cell (not once per pair), and the shuffle after the kernel
+    is output-sized, not candidate-sized. The same plan serves a small query
+    batch and a corpus-sized query set (the offline k-NN-graph job).
 
     ``centroids``: pass a TRAINED coarse quantizer (e.g. the
     ``kmeans_lloyd`` output) instead of the default md5-seeded corpus
     sample — same cost per query, tighter cells, better recall (the faiss
     IVF training step). Must be ``(cid, quantized-centroid)`` pairs.
 
-    ``broadcast_queries``: the default (True) broadcasts the query side —
-    the SERVING shape, where the query batch is small and the corpus never
-    shuffles. A corpus-sized query set (offline all-pairs-ish jobs) must
-    pass False: both sides then hash-partition on the cell id (one shuffle
-    each, cells are the co-location key) instead of broadcasting an
-    over-sized query table to every executor.
-
-    ``rerank``: ``"auto"`` (default) picks the execution strategy by query
-    shape — the corpus-sized-query-set shape (``broadcast_queries=False``)
-    dispatches to the Arrow GEMM kernel (``ivf_ann_topk_arrow``: cell-
-    cogrouped ``Q @ C.T``, the faiss shape, measured ~4.8x faster at sf0.1
-    and flattest-scaling at the 50x-corpus probe), while the serving shape
-    stays on the broadcast-join expression path. Both strategies are
-    bit-identical by construction (shared DuckDB oracle hash + the
-    tie-maximizing equivalence test in tests/test_plans.py); pass
-    ``"expression"`` or ``"arrow"`` to force one explicitly."""
-    if rerank not in ("auto", "expression", "arrow"):
-        raise ValueError(f"rerank must be auto|expression|arrow, got {rerank!r}")
-    if rerank == "arrow" or (rerank == "auto" and not broadcast_queries):
-        return ivf_ann_topk_arrow(
-            corpus, queries, vec_col, id_col, k=k, num_cells=num_cells,
-            nprobe=nprobe, centroids=centroids,
-        )
-    # norms are per-VECTOR, not per-pair: fold them once per side before
-    # the join (the candidate set is ~N*nprobe*N/cells pairs — folding both
-    # norms per pair would triple the per-pair element work). The fold
-    # expression is identical to dedup.cosine's, so the per-pair division
-    # reproduces its doubles bit-for-bit (oracle hash parity);
-    # with_checked_norm additionally rejects zero-norm rows exactly like
-    # the Arrow strategy's kernels, so the two paths can never diverge.
-    c = with_checked_norm(
-        corpus.select(
-            F.col(id_col).alias("corpus_id"),
-            F.col(vec_col).cast("array<double>").alias("cv"),
-        ),
-        F.col("cv"), F.col("corpus_id"), "cn",
-    )
-    q = with_checked_norm(
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.col(vec_col).cast("array<double>").alias("qv"),
-        ),
-        F.col("qv"), F.col("query_id"), "qn",
-    )
+    Both sides must be quantized integer vectors with integral ids; ids come
+    back as bigint. Zero-norm vectors in a probed cell raise ValueError
+    naming the ids (cosine is undefined there)."""
+    _require_integral(corpus, vec_col, id_col, "ivf_ann_topk")
+    _require_integral(queries, vec_col, id_col, "ivf_ann_topk")
+    c = corpus.select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cv"))
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
     # coarse quantizer: one tiny driver-side action (num_cells rows), then a
-    # literal in every assignment expression — the corpus-side plan is a
-    # single narrow map, no quantizer join, no assignment shuffle
+    # literal in every assignment kernel — no quantizer join
     cent_rows = centroids if centroids is not None else [
         (r["cid"], r["centv"])
         for r in ivf_centroids(corpus, id_col, vec_col, num_cells).collect()
@@ -460,29 +483,22 @@ def ivf_ann_topk(
     q_cell = q.withColumn(
         "cell", F.explode(ivf_probe_udf(cent_rows, nprobe)(F.col("qv")))
     )
-    if broadcast_queries:
-        joined = c_cell.join(F.broadcast(q_cell), "cell")
-    else:
-        joined = c_cell.join(q_cell.hint("shuffle_hash"), "cell")
-    # per-pair work is ONE dot fold; the norms ride in as the precomputed
-    # columns (same fold expression, so the quotient is bit-identical to
-    # dedup.cosine's)
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("cv"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda s, x: s + x,
+
+    def rerank(qs: pd.DataFrame, cs: pd.DataFrame) -> pd.DataFrame:
+        # a cell no query probes never reaches the norm check
+        if len(qs) == 0 or len(cs) == 0:
+            return _NO_ROWS
+        Q = np.stack(qs["qv"].to_numpy()).astype(np.int64, copy=False)
+        C = np.stack(cs["cv"].to_numpy()).astype(np.int64, copy=False)
+        qid = qs["query_id"].to_numpy()
+        return _cosine_topk(qid, Q, _norms(Q, qid), cs["corpus_id"].to_numpy(), C, k)
+
+    cand = (
+        q_cell.groupBy("cell")
+        .cogroup(c_cell.groupBy("cell"))
+        .applyInPandas(rerank, _TOPK_SCHEMA)
     )
-    scored = joined.filter(F.col("corpus_id") != F.col("query_id")).select(
-        "query_id",
-        "corpus_id",
-        (dot / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "cos_sim")
-    )
+    return _final_topk(cand, k)
 
 
 def kmeans_lloyd(
@@ -512,6 +528,7 @@ def kmeans_lloyd(
     iterative-algorithm mistake) — the caller owns unpersisting via the
     returned frame's lineage. Returns the final ``(cid, centroid)`` list
     and the final assignment DataFrame ``(id_col, vec_col, cell)``."""
+    _require_integral(corpus, vec_col, None, "kmeans_lloyd")
     corpus = corpus.persist()
     cent_rows = [
         (r["cid"], r["centv"])
@@ -804,172 +821,4 @@ def pq_ann_topk(
         adc.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "corpus_id", "rank", "dist")
-    )
-
-
-def ivf_ann_topk_arrow(
-    corpus: DataFrame,
-    queries: DataFrame,
-    vec_col: str,
-    id_col: str,
-    k: int,
-    num_cells: int,
-    nprobe: int,
-    centroids: list[tuple[int, list[int]]] | None = None,
-) -> DataFrame:
-    """IVF top-k with an Arrow GEMM re-rank — the faiss execution shape.
-
-    Same candidate semantics as ``ivf_ann_topk(broadcast_queries=False)``:
-    corpus rows live in their nearest cell, queries probe ``nprobe`` cells.
-    The re-rank differs: instead of a per-pair fold expression after a cell
-    join, the two sides COGROUP on the cell id and each cell re-ranks as
-    ONE int64 matrix multiply ``Q @ C.T`` + per-query partial top-k inside
-    an ``applyInPandas`` kernel; only ≤ k rows per (query, probed cell)
-    leave the kernel, so the final global top-k window sees k*nprobe rows
-    per query instead of the whole candidate set. At cluster scale this is
-    the shape that wins: per-cell work is a BLAS kernel over vectors
-    shipped once per cell (not once per pair), and the shuffle after the
-    kernel is output-sized, not candidate-sized.
-
-    Bit-identical to the expression path by construction: the quantized
-    integer dot and squared norms are exact in int64, and the float steps
-    (sqrt of the exact sums, norm product, division) are the same IEEE
-    doubles in the same order as ``dedup.cosine``'s fold — verified by the
-    shared DuckDB oracle hash and a tie-maximizing equivalence test.
-    Precondition (both strategies): no zero-norm vectors — cosine is
-    undefined there, and the two paths would order the resulting NaNs
-    differently (Spark sorts NaN greatest; numpy sorts it last). The
-    Arrow kernels ENFORCE this (ValueError naming the offending ids)
-    rather than silently diverging; filter zero-norm rows upstream."""
-    import numpy as np
-    import pandas as pd
-
-    c = corpus.select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    cent_rows = centroids if centroids is not None else [
-        (r["cid"], r["centv"])
-        for r in ivf_centroids(corpus, id_col, vec_col, num_cells).collect()
-    ]
-    c_cell = c.withColumn(
-        "cell", F.element_at(ivf_probe_udf(cent_rows, 1)(F.col("cv")), 1)
-    )
-    q_cell = q.withColumn(
-        "cell", F.explode(ivf_probe_udf(cent_rows, nprobe)(F.col("qv")))
-    )
-
-    def rerank(qs: pd.DataFrame, cs: pd.DataFrame):
-        if len(qs) == 0 or len(cs) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "corpus_id": [], "cos_sim": []}
-            ).astype({"query_id": "int64", "corpus_id": "int64",
-                      "cos_sim": "float64"})
-        Q = np.stack(qs["qv"].to_numpy()).astype(np.int64, copy=False)
-        C = np.stack(cs["cv"].to_numpy()).astype(np.int64, copy=False)
-        qid = qs["query_id"].to_numpy()
-        cid = cs["corpus_id"].to_numpy()
-        dot = Q @ C.T  # exact int64
-        qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
-        cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))
-        if not (qn.all() and cn.all()):  # enforce, don't silently diverge
-            bad = np.concatenate([qs["query_id"].to_numpy()[qn == 0],
-                                  cs["corpus_id"].to_numpy()[cn == 0]])
-            raise ValueError(
-                f"cosine undefined for zero-norm vectors (ids {bad[:5].tolist()}"
-                f"{'...' if len(bad) > 5 else ''}); filter them upstream"
-            )
-        cos = dot.astype(np.float64) / (qn[:, None] * cn[None, :])
-        cos[qid[:, None] == cid[None, :]] = -np.inf  # mask self-pairs
-        kk = min(k, cos.shape[1])
-        # per-query top-k under (cos DESC, corpus_id ASC) — lexsort's last
-        # key is primary; -cos negation is exact for doubles
-        order = np.lexsort((np.broadcast_to(cid, cos.shape), -cos), axis=1)
-        take = order[:, :kk]
-        out_q = np.repeat(qid, kk)
-        out_c = cid[take.ravel()]
-        out_s = np.take_along_axis(cos, take, axis=1).ravel()
-        keep = out_s > -np.inf
-        return pd.DataFrame(
-            {"query_id": out_q[keep], "corpus_id": out_c[keep],
-             "cos_sim": out_s[keep]}
-        )
-
-    cand = (
-        q_cell.groupBy("cell")
-        .cogroup(c_cell.groupBy("cell"))
-        .applyInPandas(
-            rerank, "query_id long, corpus_id long, cos_sim double"
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "cos_sim")
-    )
-
-
-def brute_force_topk_arrow(
-    corpus: DataFrame,
-    queries: list[tuple[int, list[int]]],
-    vec_col: str,
-    id_col: str,
-    k: int,
-) -> DataFrame:
-    """Exact top-k in the SERVING shape with an Arrow GEMM kernel: the
-    (small, driver-held) query batch rides into a ``mapInPandas`` over the
-    corpus as numpy literals; each corpus batch computes one int64
-    ``C @ Q.T`` and emits only its per-query partial top-k, so the final
-    global window sees ≤ k rows per (query, corpus batch) — the corpus
-    never joins, shuffles, or leaves the JVM except as Arrow batches.
-    Same bit-parity argument as ``ivf_ann_topk_arrow``: integer dot/norm
-    sums are exact, float steps replicate ``dedup.cosine``'s IEEE order,
-    so this hash-matches the expression path's oracle."""
-    import numpy as np
-    import pandas as pd
-
-    qid = np.array([int(i) for i, _ in queries], dtype=np.int64)
-    Q = np.array([v for _, v in queries], dtype=np.int64)
-    qn = np.sqrt((Q * Q).sum(axis=1).astype(np.float64))
-    if not qn.all():  # enforce, don't silently diverge
-        raise ValueError(
-            "cosine undefined for zero-norm query vectors (ids "
-            f"{qid[qn == 0][:5].tolist()}); filter them upstream"
-        )
-
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            C = np.stack(pdf["__v__"].to_numpy()).astype(np.int64, copy=False)
-            cid = pdf["__id__"].to_numpy()
-            cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))
-            if not cn.all():  # enforce, don't silently diverge
-                raise ValueError(
-                    "cosine undefined for zero-norm vectors (ids "
-                    f"{cid[cn == 0][:5].tolist()}); filter them upstream"
-                )
-            # orient query-major to reuse the ivf kernel's ordering trick
-            cos = (Q @ C.T).astype(np.float64) / (qn[:, None] * cn[None, :])
-            cos[qid[:, None] == cid[None, :]] = -np.inf  # mask self
-            kk = min(k, cos.shape[1])
-            order = np.lexsort((np.broadcast_to(cid, cos.shape), -cos), axis=1)
-            take = order[:, :kk]
-            out_s = np.take_along_axis(cos, take, axis=1).ravel()
-            keep = out_s > -np.inf
-            yield pd.DataFrame(
-                {
-                    "query_id": np.repeat(qid, kk)[keep],
-                    "corpus_id": cid[take.ravel()][keep],
-                    "cos_sim": out_s[keep],
-                }
-            )
-
-    cand = corpus.select(
-        F.col(id_col).alias("__id__"), F.col(vec_col).alias("__v__")
-    ).mapInPandas(score, "query_id long, corpus_id long, cos_sim double")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("corpus_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "rank", "cos_sim")
     )

@@ -27,35 +27,9 @@ _NORM_A = "sqrt(list_sum([a.qv[i] * a.qv[i] FOR i IN generate_series(1, 64)]))"
 _NORM_B = "sqrt(list_sum([b.qv[i] * b.qv[i] FOR i IN generate_series(1, 64)]))"
 
 
-@register(
-    "ann_bruteforce_topk",
-    oracle=f"""
-    WITH q AS (SELECT vec_id, {_QV} AS qv FROM embeddings)
-    SELECT query_id, corpus_id, rank, cos_sim FROM (
-      SELECT a.vec_id AS query_id, b.vec_id AS corpus_id,
-             round({_DOT} / ({_NORM_A} * {_NORM_B}), 6) AS cos_sim,
-             row_number() OVER (
-               PARTITION BY a.vec_id
-               ORDER BY {_DOT} / ({_NORM_A} * {_NORM_B}) DESC, b.vec_id) AS rank
-      FROM q a JOIN q b ON b.vec_id != a.vec_id
-      WHERE a.vec_id < 5
-    ) WHERE rank <= 10
-    ORDER BY query_id, rank
-    """,
-)
-def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-10 cosine neighbors for query vectors (vec_id < 5): the
-    correctness baseline every ANN variant is measured against. Query side
-    broadcasts; corpus scans once."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    qemb = emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-    out = brute_force_topk(qemb, qemb.filter(F.col("vec_id") < 5), "qv", "vec_id", 10)
-    return out.select(
-        "query_id", "corpus_id", "rank", F.round("cos_sim", 6).alias("cos_sim")
-    ).orderBy("query_id", "rank")
-
-
-_BRUTE_ORACLE_ARROW = f"""
+# served by ann_bruteforce_topk under both registry names: the "_arrow" name
+# predates the single Arrow kernel and stays for the bench set
+_BRUTE_ORACLE = f"""
     WITH q AS (SELECT vec_id, {_QV} AS qv FROM embeddings)
     SELECT query_id, corpus_id, rank, cos_sim FROM (
       SELECT a.vec_id AS query_id, b.vec_id AS corpus_id,
@@ -70,24 +44,17 @@ _BRUTE_ORACLE_ARROW = f"""
     """
 
 
-@register("ann_bruteforce_topk_arrow", oracle=_BRUTE_ORACLE_ARROW)
-def ann_bruteforce_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME exact top-10 serving job as ann_bruteforce_topk executed
-    as an Arrow GEMM kernel: the driver-held query batch rides into a
-    mapInPandas over the corpus as numpy literals, each corpus batch does
-    one int64 C @ Q.T and emits its per-query partial top-k — no join in
-    the plan at all. Hash-matched against the IDENTICAL SQL as the
-    expression path (bit-for-bit strategy equivalence, like the IVF
-    pair)."""
-    from horaedb_spark.functions.similarity import brute_force_topk_arrow
-
+@register("ann_bruteforce_topk_arrow", oracle=_BRUTE_ORACLE)
+@register("ann_bruteforce_topk", oracle=_BRUTE_ORACLE)
+def ann_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact top-10 cosine neighbors for query vectors (vec_id < 5): the
+    correctness baseline every ANN variant is measured against. The query
+    batch rides into a mapInPandas over the corpus as numpy literals; each
+    corpus batch does one int64 C @ Q.T and emits its per-query partial
+    top-k — no join in the plan, the corpus scans once."""
     emb = load_table(spark, sf_dir, "embeddings")
     qemb = emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-    qrows = [
-        (r["vec_id"], list(r["qv"]))
-        for r in qemb.filter(F.col("vec_id") < 5).collect()
-    ]
-    out = brute_force_topk_arrow(qemb, qrows, "qv", "vec_id", 10)
+    out = brute_force_topk(qemb, qemb.filter(F.col("vec_id") < 5), "qv", "vec_id", 10)
     return out.select(
         "query_id", "corpus_id", "rank", F.round("cos_sim", 6).alias("cos_sim")
     ).orderBy("query_id", "rank")
@@ -254,8 +221,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
-# shared by the expression-path and Arrow-GEMM-path kNN-graph queries —
-# both must hash-match the SAME replay (bit-identical cosines)
+# served by ann_ivf_topk_large_queryset under both registry names: the
+# "_arrow" name predates the single cogroup kernel and stays for the bench set
 _IVF_KNN_GRAPH_ORACLE = f"""
     WITH q AS (SELECT vec_id, {_QV} AS qv FROM embeddings),
     cent AS (
@@ -289,20 +256,17 @@ _IVF_KNN_GRAPH_ORACLE = f"""
     """
 
 
+@register("ann_ivf_topk_arrow", oracle=_IVF_KNN_GRAPH_ORACLE)
 @register("ann_ivf_topk_large_queryset", oracle=_IVF_KNN_GRAPH_ORACLE)
 def ann_ivf_topk_large_queryset(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CORPUS-SIZED query set shape (every vector queries its top-3
-    neighbors — the offline k-NN-graph / near-dup-graph job): broadcasting
-    the query side would ship the whole corpus to every executor, so
-    ``broadcast_queries=False`` makes both sides hash-partition on the IVF
-    cell id — with the cell as the co-location key. Under the default
-    ``rerank="auto"`` this shape dispatches to the Arrow GEMM kernel
-    (cell-cogrouped ``Q @ C.T`` + per-cell partial top-k — the faiss
-    execution shape, measured ~4.8x faster at sf0.1 and flattest-scaling
-    at the 50x-corpus probe), which is bit-identical to the expression
-    path by construction. Same integer-exact arithmetic, hash-matched
-    against the SQL replay; the plan shape (cogroup kernel, no query
-    broadcast, no per-pair fold) is pinned in tests/test_plans.py."""
+    neighbors — the offline k-NN-graph / near-dup-graph job). Queries and
+    corpus COGROUP on the IVF cell id and each cell re-ranks as one int64
+    ``Q @ C.T`` Arrow kernel with a per-query partial top-k — the faiss
+    execution shape: no query broadcast, no per-pair fold, and only k rows
+    per (query, probed cell) leave the kernel, so the final top-k window is
+    output-sized. Integer-exact arithmetic, hash-matched against the SQL
+    replay; the plan shape is pinned in tests/test_plans.py."""
     from horaedb_spark.functions.similarity import ivf_ann_topk
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -315,30 +279,6 @@ def ann_ivf_topk_large_queryset(spark: SparkSession, sf_dir: str) -> DataFrame:
         k=3,
         num_cells=16,
         nprobe=2,
-        broadcast_queries=False,
-    )
-    return out.select(
-        "query_id", "corpus_id", "rank", F.round("cos_sim", 6).alias("cos_sim")
-    ).orderBy("query_id", "rank")
-
-
-@register("ann_ivf_topk_arrow", oracle=_IVF_KNN_GRAPH_ORACLE)
-def ann_ivf_topk_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME corpus-sized kNN-graph job executed in the faiss shape:
-    queries and corpus COGROUP on the IVF cell id and each cell re-ranks
-    as one int64 ``Q @ C.T`` Arrow kernel with a per-query partial top-k —
-    only k rows per (query, probed cell) leave the kernel, so the final
-    top-k window is output-sized. Hash-matched against the IDENTICAL
-    oracle as ann_ivf_topk_large_queryset: the integer dot/norms are exact
-    and the float steps replicate dedup.cosine's IEEE order, so the two
-    execution strategies must agree bit-for-bit (the strongest equivalence
-    statement the gate can make about a custom kernel)."""
-    from horaedb_spark.functions.similarity import ivf_ann_topk_arrow
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    qemb = emb.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-    out = ivf_ann_topk_arrow(
-        qemb, qemb, "qv", "vec_id", k=3, num_cells=16, nprobe=2
     )
     return out.select(
         "query_id", "corpus_id", "rank", F.round("cos_sim", 6).alias("cos_sim")

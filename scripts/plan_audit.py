@@ -107,14 +107,9 @@ def _bad_nested_loops(plan: str) -> int:
 # BroadcastNestedLoopJoin sites where the broadcast side is bounded by
 # construction — the reason is the contract; revisit if inputs grow.
 NESTED_LOOP_OK = {
-    "ann_bruteforce_topk": "the intentional brute-force kNN baseline: "
-    "bounded query set broadcast against the corpus",
-    "ann_filtered_topk": "bounded query set broadcast against the "
-    "metadata-pre-filtered corpus (same kernel as the brute baseline)",
     "ann_pq_topk": "bounded query set broadcast (PQ scan)",
     "ann_pq_filtered_topk": "bounded query set broadcast (PQ scan over the "
     "metadata-pre-filtered encoded corpus)",
-    "ann_recall_check": "brute-force arm of the recall comparison",
     "dedup_threshold_sweep": "bounded threshold grid x cluster stats",
     "embedding_centroid_confusion": "centroid x centroid grid (<=65k rows)",
     "dormant_customers_q22": "TPC-H scalar subquery (single-row aggregate)",

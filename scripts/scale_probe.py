@@ -26,6 +26,7 @@ sys.path.insert(0, __file__.rsplit("/", 2)[0])
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from horaedb_spark.core.session import get_spark  # noqa: E402
+from horaedb_spark.functions.similarity import quantize  # noqa: E402
 from horaedb_spark.queries.tables import events_ms, load_table  # noqa: E402
 
 
@@ -179,39 +180,27 @@ def main() -> None:
         f"{base}/embeddings"
     )
     embN = spark.read.parquet(f"{base}/embeddings")
-    qset = emb1.orderBy("vec_id").limit(100)
+    # both kernels compute in int64 and reject float columns: quantize first
+    qset = emb1.orderBy("vec_id").limit(100).select(
+        "vec_id", quantize(F.col("embedding")).alias("qv")
+    )
 
     def ann_brute(corpus: DataFrame):
         from horaedb_spark.functions.similarity import brute_force_topk
 
-        return brute_force_topk(corpus, qset, "embedding", "vec_id", 10)
+        qc = corpus.select("vec_id", quantize(F.col("embedding")).alias("qv"))
+        return brute_force_topk(qc, qset, "qv", "vec_id", 10)
 
     def ann_ivf(corpus: DataFrame):
         import math
 
         from horaedb_spark.functions.similarity import ivf_ann_topk
 
+        qc = corpus.select("vec_id", quantize(F.col("embedding")).alias("qv"))
         n = corpus.count()
         cells = max(16, int(math.isqrt(n)))
         return ivf_ann_topk(
-            corpus, qset, "embedding", "vec_id", 10,
-            num_cells=cells, nprobe=4,
-        )
-
-    def ann_ivf_arrow(corpus: DataFrame):
-        import math
-
-        from horaedb_spark.functions.similarity import (
-            ivf_ann_topk_arrow,
-            quantize,
-        )
-
-        qc = corpus.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-        qs = qset.select("vec_id", quantize(F.col("embedding")).alias("qv"))
-        n = corpus.count()
-        cells = max(16, int(math.isqrt(n)))
-        return ivf_ann_topk_arrow(
-            qc, qs, "qv", "vec_id", 10, num_cells=cells, nprobe=4
+            qc, qset, "qv", "vec_id", 10, num_cells=cells, nprobe=4
         )
 
     def funnel(ev: DataFrame):
@@ -284,7 +273,6 @@ def main() -> None:
         "dedup_minhash_pairs": (minhash_docs, docs1, docsN),
         "ann_brute_100q": (ann_brute, emb1, embN),
         "ann_ivf_100q": (ann_ivf, emb1, embN),
-        "ann_ivf_arrow_100q": (ann_ivf_arrow, emb1, embN),
     }
     out = {}
     for name, spec in ops.items():
@@ -477,7 +465,6 @@ def ann_filtered_probe(spark, sf_dir: str, mult: int) -> dict:
         ivf_ann_topk,
         ivf_centroids,
         pq_ann_topk,
-        quantize,
     )
 
     base = tempfile.mkdtemp(prefix="ann_filtered_probe_")
